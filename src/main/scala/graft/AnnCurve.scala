@@ -124,7 +124,7 @@ object AnnCurve {
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (ivf, tIvf) = timed(IvfIndex.build(emb, 256, maxIter = 10))
       val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_recall"
-      graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+      graft.data.Artifacts.deleteRecursively(dir)
       val (_, tBuild) = timed {
         val built = PqIndex.buildIvfPq(ivf, emb, m, ksub)
         PqIndex.saveIvfPq(built, dir)
@@ -186,7 +186,7 @@ object AnnCurve {
       for (cells <- Seq(256, graft.llm.IvfIndex.scaledCells(nVec))) {
         val (ivf, tIvf) = timed(IvfIndex.build(emb, cells, maxIter = 10))
         val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_scalelaw_$cells"
-        graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+        graft.data.Artifacts.deleteRecursively(dir)
         val (_, tBuild) = timed {
           val built = PqIndex.buildIvfPq(ivf, emb, m, ksub, refineKsub = 256)
           PqIndex.saveIvfPq(built, dir)
@@ -226,7 +226,7 @@ object AnnCurve {
       val (nD2, nD3) = (day2.count(), day3.count())
       val (ivfA, tIvfA) = timed(IvfIndex.build(day1, 256, maxIter = 10))
       val dir = s"${sys.props("java.io.tmpdir")}/graft_anncurve_ivfpq_compact"
-      graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+      graft.data.Artifacts.deleteRecursively(dir)
       val (m, ksub, nProbe, shortlist) = (32, 64, 8, 200)
       val (_, tBase) = timed {
         val built = PqIndex.buildIvfPq(ivfA, day1, m, ksub)

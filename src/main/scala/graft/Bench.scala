@@ -178,8 +178,9 @@ object Bench {
     // and made per-query numbers incomparable
     // Staged cache release (r13 finding): the dedup family's pinned
     // MEMORY_AND_DISK blocks (shared shingle checkpoints + the ≥-floor
-    // pair cache) have NO consumers after the Incremental family in
-    // declaration order — Multimodal/Sampling/Windowed/Streams never read
+    // pair cache) and its ledger stores have NO consumers after the
+    // Incremental family in declaration order — Multimodal/Sampling/
+    // Windowed/Streams never read
     // them — yet left pinned they tax every later line with GC at the
     // sf10 8 GiB default (st_stream_session 94.0 s in-suite vs 9.0 s at
     // 16 GiB, same plan). Release them right after their last consumer
@@ -326,11 +327,7 @@ object Bench {
       .map { case (k, v) => s"\"" + k + "\":\"" + v.take(60) + "\"" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"queries":$hq,"errors":$he,"sf":$sfNum,"cpus":"${jstr(cpus)}","master":"${jstr(MasterEnv.master(cpus))}",$contention}""")
-    graft.llm.Dedup.releaseCaches()
-    graft.llm.PqIndex.releaseModels()
-    graft.streaming.Streams.releaseSinks()
-    graft.ops.Scans.releaseLayouts()
-    graft.data.Frames.releaseTracked()
+    graft.data.Artifacts.releaseAll()
     spark.stop()
   }
 }

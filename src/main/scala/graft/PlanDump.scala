@@ -35,7 +35,7 @@ object PlanDump {
       }
       graft.data.Frames.releaseTracked()
     }
-    graft.llm.Dedup.releaseCaches()
+    graft.data.Artifacts.releaseAll()
     spark.stop()
   }
 }

@@ -48,6 +48,7 @@ object ProbePlan {
       }
       graft.data.Frames.releaseTracked()
     }
+    graft.data.Artifacts.releaseAll()
     spark.stop()
   }
 }

@@ -184,7 +184,7 @@ object RecallProbe {
       s""""semdedup":{"skipped":"${what.replaceAll("""["\\\n\r\t]""", " ")}"}"""
     }.get
 
-    Dedup.releaseCaches()
+    graft.data.Artifacts.releaseAll()
     val dir = java.nio.file.Paths.get(out).getParent
     if (dir != null) java.nio.file.Files.createDirectories(dir)
     // same sanitization as Bench.jstr: a quote/backslash in a user-typed

@@ -30,24 +30,15 @@ object Frames {
     out
   }
 
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
   /** Eagerly localCheckpoint `df` and register the result for deferred
     * release — for intermediates a RETURNED lazy plan still reads (so they
-    * cannot be released inside the operator). Verify/Bench/specs call
-    * [[releaseTracked]] at end of run, next to Dedup.releaseCaches. */
-  def trackedCheckpoint(df: DataFrame): DataFrame = {
-    // checkpoint OUTSIDE the lock: it is an eager Spark job (GB-scale at
-    // sf10) and holding the monitor for its duration would serialize any
-    // concurrent caller; only the registration needs mutual exclusion
-    val out = df.localCheckpoint(eager = true)
-    synchronized { tracked += out }
-    out
-  }
+    * cannot be released inside the operator). Owned by the enclosing
+    * [[Artifacts.scoped]] build if there is one, else released by
+    * [[releaseTracked]] once the query's result is consumed. */
+  def trackedCheckpoint(df: DataFrame): DataFrame =
+    Artifacts.track(Artifacts.Family.Query, release)(df.localCheckpoint(eager = true))
 
-  /** Release every frame registered by [[trackedCheckpoint]]. */
-  def releaseTracked(): Unit = synchronized {
-    tracked.foreach(release)
-    tracked.clear()
-  }
+  /** Release every frame registered by [[trackedCheckpoint]] outside a
+    * scoped build. */
+  def releaseTracked(): Unit = Artifacts.release(Artifacts.Family.Query)
 }

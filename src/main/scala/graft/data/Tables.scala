@@ -56,18 +56,17 @@ object Tables {
     * quality flag #1: every ANN declaration fired 2-3 redundant count
     * jobs per run just to size scaledCells/scaledShortlist). The parquet
     * dirs never change within a run, so one count per (dir, table) per
-    * JVM is correct — the cachedIndexFor idiom applied to the knob that
-    * sizes it. */
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+    * registry lifetime is correct. */
+  private final case class Count(sfDir: String, name: String)
+    extends Artifacts.Key(Artifacts.Family.Values, "count")
 
   def cachedCount(spark: SparkSession, sfDir: String, name: String): Long =
-    countCache.getOrElseUpdate((sfDir, name), apply(spark, sfDir, name).count())
+    Artifacts.memo(Count(sfDir, name))(apply(spark, sfDir, name).count())
 
   /** Derived-frame variant (e.g. an append query's day-1 split): `key`
     * must uniquely name the derivation within `sfDir`. */
   def cachedCountOf(sfDir: String, key: String)(df: => DataFrame): Long =
-    countCache.getOrElseUpdate((sfDir, key), df.count())
+    Artifacts.memo(Count(sfDir, key))(df.count())
 
   /** Register all tables as temp views (idempotent) so query builders can
     * use `spark.sql` where it is clearer than the DataFrame DSL. */

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.data.Tables
+import graft.data.{Artifacts, Tables}
 import graft.ops.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -271,17 +271,16 @@ object Bpe {
         col("pieces_per_word"))
   }
 
-  // Per-corpus merge-table cache (the d0 shared-cache idiom, keyed by the
-  // data dir like Dedup's token/pair caches): the declared train + encode
-  // pair shares ONE training run in a declaration-ordered suite, and the
-  // merge table itself is driver-sized (≤ nMerges rows) so caching it
-  // holds no executor blocks — nothing to release.
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Int, String, String, String, Long)]]
+  // Per-corpus merge table (the d0 shared-cache idiom, keyed by the data
+  // dir): the declared train + encode pair shares ONE training run in a
+  // declaration-ordered suite, and the merge table itself is driver-sized
+  // (≤ nMerges rows), so the entry holds no executor blocks.
+  private final case class Merges(d: String, nMerges: Int)
+    extends Artifacts.Key(Artifacts.Family.Values, "merges")
 
   private def trainedMerges(s: SparkSession, d: String,
       nMerges: Int): Seq[(Int, String, String, String, Long)] =
-    mergeCache.getOrElseUpdate(s"$d#$nMerges",
+    Artifacts.memo(Merges(d, nMerges))(
       trainBpe(Tables(s, d, "documents"), nMerges = nMerges).collect()
         .sortBy(_.getInt(0))
         .map(r => (r.getInt(0), r.getString(1), r.getString(2),

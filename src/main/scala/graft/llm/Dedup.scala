@@ -1,6 +1,7 @@
 package graft.llm
 
-import graft.data.{Frames, Tables}
+import graft.data.{Artifacts, Frames, Tables}
+import graft.data.Artifacts.{Family, Key}
 import graft.ops.QueryDef
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -900,16 +901,15 @@ object Dedup {
   // bench run, growing with the holdout. The probe is an eval benchmark —
   // bounded as the corpus grows (the d7b broadcast argument) — so the
   // persisted copy is KB–MB at any scale; released with the other caches.
-  private val gramProbeCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private final case class ProbeGrams(c: Corpus, k: Int) extends Key(Family.Dedup, "probegrams")
 
   /** The distinct width-`k` gram hash set of `probeDocs`, shared across
     * every decontamination stage probing the same frame (§2.4 — remove
-    * repeated passes; the pairCache contract: first consumer pays inside
+    * repeated passes; the [[Pairs]] contract: first consumer pays inside
     * its timed line, releaseCaches reclaims). */
   def probeGramSet(probeDocs: DataFrame, k: Int = 8): DataFrame =
-    gramProbeCache.getOrElseUpdate((corpusKey(probeDocs), k).toString,
-      wideGrams(probeDocs, k).select("h").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Artifacts.persist(ProbeGrams(Corpus.of(probeDocs), k))(
+      wideGrams(probeDocs, k).select("h").distinct())
 
   private[graft] def wideGrams(docs: DataFrame, k: Int = 8): DataFrame =
     docs.filter(size(tokens) >= k)
@@ -1171,28 +1171,29 @@ object Dedup {
     boundedScoredPairs(docs, Int.MaxValue)
 
   // ---- shared per-corpus caches -------------------------------------------
-  // Two tracked caches serve the whole dedup family:
-  //   tokenCache  — the localCheckpoint'ed shingle-array rows backing the
+  // Registry entries (graft.data.Artifacts, Family.Dedup) serve the whole
+  // dedup family, each keyed by the corpus it was built from:
+  //   Shingles — the localCheckpoint'ed shingle-array rows backing the
   //     exploded (doc_id, shingle-hash) view (see sharedTokens). Consumers:
   //     the posting join (d4/d6), the contamination scan (d7), and the
   //     minhash signatures (d3).
-  //   pairCache   — the scored pair table at jaccard ≥ PairCacheFloor (d4
+  //   Pairs    — the scored pair table at jaccard ≥ PairCacheFloor (d4
   //     reports ≥ 0.1, d6 clusters ≥ 0.8, d3 verifies its LSH candidates
   //     against it; see PairCacheFloor for why sub-floor pairs are not kept).
-  // Tracked so the lifecycle is explicit: callers done with a corpus call
-  // releaseCaches() — the round-3 version persisted per call and never
-  // unpersisted, accumulating untracked blocks across a Verify/Bench run.
-  private val tokenCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private val pairCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  // Callers done with a corpus call releaseCaches() — the round-3 version
+  // persisted per call and never unpersisted, accumulating untracked blocks
+  // across a Verify/Bench run.
+  private final case class Shingles(c: Corpus) extends Key(Family.Dedup, "shingles")
+  private final case class Pairs(c: Corpus) extends Key(Family.Dedup, "pairs")
   // Verified banded-LSH pair sets, keyed (corpus, threshold, maxBucketSize):
   // d3, d6b and d8b all declare the identical pair computation over the
   // same corpus — the signature agg + band bucketing + exact verification
   // ran three times per run (r17; ~2 s each at sf0.1, growing with scale).
   // The verified pair table is tiny (true near-dup pairs only), so one
   // persisted copy serves every consumer — the same within-run sharing
-  // contract as pairCache above; released with it.
-  private val lshPairCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Double, Int), DataFrame]
+  // contract as Pairs above; released with it.
+  private final case class LshPairs(c: Corpus, threshold: Double, maxBucketSize: Int)
+    extends Key(Family.Dedup, "lshpairs")
   // Per-corpus minhash signature table (doc_id, m0..m63) — the third shared
   // cache (r17): signatures are a doc-LOCAL function of the doc's shingles,
   // so every consumer over the same corpus (the inline LSH pair path, the
@@ -1200,7 +1201,7 @@ object Dedup {
   // doc_id semi-join) reads one persisted table instead of re-running the
   // 64-permutation aggregation per query. First consumer pays (the
   // fingerprint-store design: a deployment materializes exactly this).
-  private val sigCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private final case class Sigs(c: Corpus) extends Key(Family.Dedup, "sigstore")
 
   /** Row bound for PERSISTING the shared signature table (the
     * IvfIndex.AssignedCacheMaxRows rule: never pin what a map stage
@@ -1211,9 +1212,10 @@ object Dedup {
     * ledger build OOMed outright with the unconditional persist. Above
     * the bound the store is DISK-BACKED (r18): one standalone
     * materialization writes the aggregation to a per-corpus parquet under
-    * java.io.tmpdir and every consumer reads that flat scan — sharing
-    * without the heap pin, rebuilt per JVM and deleted at release. */
-  private[graft] val SigCacheMaxRows = 2000000L
+    * the registry's tmp dir and every consumer reads that flat scan —
+    * sharing without the heap pin, rebuilt per JVM and deleted at release.
+    * A var only so a spec can drive the above-bound path on a small corpus. */
+  @volatile private[graft] var sigCacheMaxRows = 2000000L
 
   // one doc-count probe per corpus (drives the sig-persist and the
   // subset-sharing dispatches below). docs.count() — an upper bound on
@@ -1223,18 +1225,15 @@ object Dedup {
   // arrays) just to learn the row count, even when the dispatch then
   // rejected the cache (r18, advice — the >2M-doc path paid the exact
   // cost the bound exists to avoid).
-  private val shingleCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private final case class DocCount(c: Corpus) extends Key(Family.Dedup, "doccount")
   private def cachedShingleCount(docs: DataFrame): Long =
-    shingleCountCache.getOrElseUpdate(corpusKey(docs), docs.count())
+    Artifacts.memo(DocCount(Corpus.of(docs)))(docs.count())
 
-  // per-corpus parquet spill dirs backing the ABOVE-BOUND sig store —
-  // deleted with the caches they shadow (releaseCaches/releaseCorpusCaches)
-  private val sigSpillDirs = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame =
-    sigCache.getOrElseUpdate(corpusKey(docs), {
+  private[graft] def sharedMinhashSigs(docs: DataFrame): DataFrame = {
+    val key = Sigs(Corpus.of(docs))
+    Artifacts.memo(key, Frames.release) {
       val sig = minhashAgg(sharedTokens(docs))
-      if (cachedShingleCount(docs) <= SigCacheMaxRows)
+      if (cachedShingleCount(docs) <= sigCacheMaxRows)
         sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else {
         // DISK-BACKED signature store above the bound (r18, verdict #3):
@@ -1247,15 +1246,12 @@ object Dedup {
         // corpus-wide agg subtree into their own plans (the other half of
         // that OOM). Rebuilt per JVM (overwrite-on-miss), deleted at
         // release — never a cross-run result cache.
-        val key = corpusKey(docs)
-        val keyHex = java.security.MessageDigest.getInstance("MD5")
-          .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val dir = s"${sys.props("java.io.tmpdir")}/graft_sigstore_$keyHex"
+        val dir = Artifacts.dir(key)
         sig.write.mode("overwrite").parquet(dir)
-        sigSpillDirs.put(key, dir)
         docs.sparkSession.read.parquet(dir)
       }
-    })
+    }
+  }
 
   /** Cache key for a corpus frame. The naive canonicalized-plan string is
     * NOT sufficient: an unresolved parquet read prints "paths: 1 provided"
@@ -1266,15 +1262,15 @@ object Dedup {
     * canonical plan plus the resolved input files (distinct per corpus
     * directory) plus the row data of any in-memory relation (same-schema
     * test frames differ only in data, which the plan string omits). */
-  private def corpusKey(docs: DataFrame): String = {
-    val analyzed = docs.queryExecution.analyzed
-    val localData = analyzed.collectLeaves().collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.hashCode()
+  private final case class Corpus(plan: String, files: Seq[String], localData: Seq[Int])
+  private object Corpus {
+    def of(docs: DataFrame): Corpus = {
+      val analyzed = docs.queryExecution.analyzed
+      Corpus(analyzed.canonicalized.toString, docs.inputFiles.toSeq.sorted,
+        analyzed.collectLeaves().collect {
+          case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l.data.hashCode()
+        })
     }
-    (analyzed.canonicalized.toString,
-      docs.inputFiles.toSeq.sorted.mkString(","),
-      localData.mkString(",")).toString
   }
 
   /** Shared exploded (doc_id, h) distinct-shingle-hash pairs. The shingle
@@ -1284,14 +1280,16 @@ object Dedup {
     * in codegen, so exploding the un-materialized shingle expression costs
     * ~3s per evaluation — the checkpoint turns the generator into a bound
     * attribute. */
-  def sharedTokens(docs: DataFrame): DataFrame =
-    sharedShingles(docs).select(col("doc_id"), explode(col("sh")).as("h"))
+  def sharedTokens(docs: DataFrame): DataFrame = explodeShingles(sharedShingles(docs))
+
+  private def explodeShingles(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), explode(col("sh")).as("h"))
 
   /** The cached (doc_id, sh: array<long>) shingle-set rows themselves —
     * for consumers that need per-doc SETS (candidate verification's
     * array_intersect) rather than the exploded posting view. */
   private def sharedShingles(docs: DataFrame): DataFrame =
-    tokenCache.getOrElseUpdate(corpusKey(docs), shingleSets(fanOut(docs)).localCheckpoint())
+    Artifacts.checkpoint(Shingles(Corpus.of(docs)))(shingleSets(fanOut(docs)))
 
   /** CPU-parallelism guard for the shingle build: a single-row-group input
     * (row groups are Spark's split unit, so the small test corpus arrives
@@ -1306,7 +1304,7 @@ object Dedup {
   }
 
   private def sharedScoredPairs(docs: DataFrame): DataFrame =
-    pairCache.getOrElseUpdate(corpusKey(docs),
+    Artifacts.persist(Pairs(Corpus.of(docs)))(
       scoredNgramPairs(docs).filter(col("jaccard") >= PairCacheFloor)
         // The pair-AGG shuffle is deliberately wide (8×parallelism — see
         // boundedScoredPairs), but the ≥-floor table retained here is ~5
@@ -1320,45 +1318,13 @@ object Dedup {
         // itself back to 32 tasks and reintroduce the 8×-sized per-task
         // agg state the wide shuffle exists to avoid. The extra exchange
         // moves only the ≥-floor rows (KBs), on the one-time d0 build line.
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism))
 
-  /** Release every tracked token/pair cache (end of a Verify/Bench run, or
-    * between corpora in a long-lived session). The token cache holds
-    * localCheckpoint'ed datasets whose blocks live on the underlying RDD,
-    * not in the SQL cache manager — unpersist that RDD directly. */
-  def releaseCaches(): Unit = {
-    tokenCache.values.foreach(graft.data.Frames.release)
-    tokenCache.clear()
-    gramProbeCache.values.foreach(_.unpersist(blocking = false))
-    gramProbeCache.clear()
-    pairCache.values.foreach(_.unpersist(blocking = false))
-    pairCache.clear()
-    lshPairCache.values.foreach(_.unpersist(blocking = false))
-    lshPairCache.clear()
-    sigCache.values.foreach(_.unpersist(blocking = false))
-    sigCache.clear()
-    sigSpillDirs.values.foreach(d =>
-      graft.streaming.Streams.deleteRecursively(new java.io.File(d)))
-    sigSpillDirs.clear()
-    shingleCountCache.clear()
-  }
-
-  /** Release only the caches keyed to `docs`' corpus — for operators that
-    * build a corpus-scoped cache mid-query (the lazy ledger build) and must
-    * not clear the GLOBAL registries, which may hold other callers' live
-    * tracked frames. */
-  def releaseCorpusCaches(docs: DataFrame): Unit = {
-    val k = corpusKey(docs)
-    tokenCache.remove(k).foreach(graft.data.Frames.release)
-    pairCache.remove(k).foreach(_.unpersist(blocking = false))
-    lshPairCache.keys.filter(_._1 == k).foreach(
-      lshPairCache.remove(_).foreach(_.unpersist(blocking = false)))
-    sigCache.remove(k).foreach(_.unpersist(blocking = false))
-    sigSpillDirs.remove(k).foreach(d =>
-      graft.streaming.Streams.deleteRecursively(new java.io.File(d)))
-    shingleCountCache.remove(k): Unit
-  }
+  /** Release every Dedup-family entry: the shared corpus caches, signature
+    * stores and the persisted ledgers with their append guards (end of a
+    * Verify/Bench run's dedup family, or between corpora in a long-lived
+    * session). */
+  def releaseCaches(): Unit = Artifacts.release(Family.Dedup)
 
   /** Connected components by min-label propagation WITH pointer doubling:
     * each round every node takes the min label among itself and its
@@ -1797,9 +1763,11 @@ object Dedup {
     * text agree bit-for-bit. Docs under 3 tokens have no shingles and no
     * row here (they cannot be shingle near-dups of anything). */
   private[graft] def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashAgg(sharedTokens(docs))
-      .select(col("doc_id"),
-        array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
+    sigArray(minhashAgg(sharedTokens(docs)))
+
+  /** (doc_id, m0..m63) → (doc_id, sig: array<long>). */
+  private def sigArray(agg: DataFrame): DataFrame =
+    agg.select(col("doc_id"), array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
 
   /** LSH band keys from a signature ARRAY (persisted or fresh):
     * (doc_id, band, bh). Same banding arithmetic as [[bandedLshPairs]]. */
@@ -1852,9 +1820,8 @@ object Dedup {
       docs: DataFrame,
       jaccardThreshold: Double,
       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    lshPairCache.getOrElseUpdate((corpusKey(docs), jaccardThreshold, maxBucketSize),
-      bandedLshPairsImpl(docs, jaccardThreshold, maxBucketSize)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    Artifacts.persist(LshPairs(Corpus.of(docs), jaccardThreshold, maxBucketSize))(
+      bandedLshPairsImpl(docs, jaccardThreshold, maxBucketSize))
 
   /** [[bandedLshPairs]] among a SUBSET of an already-shingled corpus:
     * shingles and minhash signatures are doc-LOCAL functions of each doc's
@@ -1873,23 +1840,27 @@ object Dedup {
     * isolated day-N append must never pay a full-corpus pass to
     * fingerprint a 1% batch. */
   private def sigShareable(corpus: DataFrame): Boolean = {
-    val k = corpusKey(corpus)
-    sigCache.contains(k) || tokenCache.contains(k) ||
-      cachedShingleCount(corpus) <= SigCacheMaxRows
+    val c = Corpus.of(corpus)
+    Artifacts.contains(Sigs(c)) || Artifacts.contains(Shingles(c)) ||
+      cachedShingleCount(corpus) <= sigCacheMaxRows
   }
 
   /** [[minhashSignatures]] for a SUBSET of an already-cached corpus — the
     * sig store restricted by a doc_id semi-join (signatures are doc-local;
-    * see [[bandedLshPairsAmong]]). Above [[SigCacheMaxRows]] the store is
+    * see [[bandedLshPairsAmong]]). Above [[sigCacheMaxRows]] the store is
     * parquet-backed (r18), so the consumer's plan stays a flat scan —
     * inlining a corpus-wide aggregation subtree into the composed
     * consumer's plan measured as an OOM at the 5M-doc sf100 slice. */
   def minhashSignaturesAmong(corpus: DataFrame, memberIds: DataFrame): DataFrame =
     if (sigShareable(corpus))
-      sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          array((0 until NumHashes).map(i => col(s"m$i")): _*).as("sig"))
-    else minhashSignatures(corpus.join(memberIds, Seq("doc_id"), "left_semi"))
+      sigArray(sharedMinhashSigs(corpus).join(memberIds, Seq("doc_id"), "left_semi"))
+    else {
+      // cold and above the bound: the subset is tokenized for this caller
+      // alone, so its shingle checkpoint is tracked — a scoped build (the
+      // ledger build and appends) frees it when the build returns
+      val subset = corpus.join(memberIds, Seq("doc_id"), "left_semi")
+      sigArray(minhashAgg(explodeShingles(Frames.trackedCheckpoint(shingleSets(fanOut(subset))))))
+    }
 
   /** [[shingleSets]] for a SUBSET of an already-cached corpus — the cached
     * per-doc shingle arrays restricted by a doc_id semi-join, avoiding a

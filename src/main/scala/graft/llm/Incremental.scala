@@ -1,6 +1,7 @@
 package graft.llm
 
-import graft.data.{Frames, Tables}
+import graft.data.{Artifacts, Frames, Tables}
+import graft.data.Artifacts.{Family, Key}
 import graft.ops.QueryDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,22 +78,18 @@ object Incremental {
   // the persisted day-1 ledger (build-once per corpus, like IvfIndex)
   // ---------------------------------------------------------------------
 
-  // process-level registry of built ledger paths, keyed by corpus dir —
-  // the build is the offline day-1 job a deployment runs once; every
-  // incremental query against the same corpus reads the same parquet
-  private val ledgerPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  // the built ledger per corpus dir — the build is the offline day-1 job a
+  // deployment runs once; every incremental query against the same corpus
+  // reads the same parquet (its dir is a registry tmp dir, released with
+  // the Dedup family)
+  private final case class Ledger(d: String) extends Key(Family.Dedup, "ledger")
 
   private[graft] def ledgerDir(s: SparkSession, d: String): String =
-    ledgerPaths.getOrElseUpdate(d, {
-      // md5 of the corpus dir, not hashCode: distinct corpora must never
-      // collide on one on-disk path (same rationale as IvfIndex)
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_ledger_$keyHex"
+    Artifacts.memo(Ledger(d)) {
+      val dir = Artifacts.dir(Ledger(d))
       buildLedger(s, d, dir)
       dir
-    })
+    }
 
   // ---- the store's two zones (the LSM shape every appendable columnar
   // store converges on):
@@ -167,21 +164,19 @@ object Incremental {
     * (min doc_id per h among quality survivors), and the d7b
     * decontamination of the keepers against the holdout's broadcast gram
     * index. Writes the narrow store; day-1 text is never read again. */
-  private def buildLedger(s: SparkSession, d: String, dir: String): Unit = {
+  private def buildLedger(s: SparkSession, d: String, dir: String): Unit = Artifacts.scoped {
     // a fresh build owns the WHOLE store dir: clear any stale zones left
-    // by a prior process (its base/ would otherwise union with the
+    // by a failed earlier build (its base/ would otherwise union with the
     // rebuilt delta/ and double every row)
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    Artifacts.deleteRecursively(dir)
     val day1 = Tables(s, d, "documents").filter(isDay1)
-    // NOT trackedCheckpoint: the build runs lazily on first ledger touch,
-    // possibly mid-way through a caller's own query — releasing the GLOBAL
-    // registries here would unpersist that caller's live checkpoints. The
-    // build releases exactly what it created: this frame + the day-1
-    // corpus-keyed token cache minhashSignatures registers.
-    val fp = day1.select(
+    // the build runs lazily on first ledger touch, possibly mid-way through
+    // a caller's own query, so it must not release the caller's tracked
+    // frames: the scope frees exactly what the build tracked — this frame
+    // and, cold above the sig bound, the day-1 shingle checkpoint
+    val fp = Frames.trackedCheckpoint(day1.select(
       col("doc_id"), col("source"), size(toks).cast("long").as("n_tok"),
-      TextStats.qualityPass.as("q"), md5(col("text")).as("h"))
-      .localCheckpoint(eager = true)
+      TextStats.qualityPass.as("q"), md5(col("text")).as("h")))
     val keepers = fp.filter(col("q")).groupBy("h")
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), lit(true).as("is_keeper"))
@@ -221,8 +216,6 @@ object Incremental {
       .write.mode("overwrite")
       .option("parquet.block.size", LedgerRowGroupBytes.toString)
       .partitionBy("batch_id").parquet(deltaDir(dir))
-    Frames.release(fp)
-    Dedup.releaseCorpusCaches(day1)
   }
 
   /** Ledger landing row-group size: 32 MB instead of the 128 MB default.
@@ -248,17 +241,14 @@ object Incremental {
   // the APPEND path: per-crawl-batch fingerprints added to the store
   // ---------------------------------------------------------------------
 
-  // per-process guard: each batch is appended exactly once per store
-  // build (buildLedger's rebuild resets the dir, so a fresh process
-  // re-derives batch 0 and re-appends the batches — deterministic content)
-  private val appendedBatches =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Boolean]
+  // guard: each batch is appended exactly once per store build. Same family
+  // as the Ledger entry, so a release drops both and a rebuilt store
+  // re-appends its batches (deterministic content)
+  private final case class Appended(d: String, n: Int) extends Key(Family.Dedup, "appended")
 
-  /** Append crawl batch `n` (ensuring it exactly once per process). */
-  private def appendBatch(s: SparkSession, d: String, n: Int): Unit = {
-    val dir = ledgerDir(s, d)
-    appendedBatches.getOrElseUpdate((dir, n), { appendBatchWrite(s, d, n); true })
-  }
+  /** Append crawl batch `n` (ensuring it exactly once per store build). */
+  private def appendBatch(s: SparkSession, d: String, n: Int): Unit =
+    Artifacts.memo(Appended(d, n))(appendBatchWrite(s, d, n))
 
   /** The append WRITE for batch `n` — the day-N production cadence: the
     * batch is fingerprinted and decided against the as-of-(n−1) store —
@@ -277,7 +267,7 @@ object Incremental {
     * with identical content instead of doubling it (the mode("append")
     * formulation this replaces failed exactly that retry). Package-
     * private so the idempotence spec can force a mid-sequence re-run. */
-  private[graft] def appendBatchWrite(s: SparkSession, d: String, n: Int): Unit = {
+  private[graft] def appendBatchWrite(s: SparkSession, d: String, n: Int): Unit = Artifacts.scoped {
     val dir = ledgerDir(s, d)
     // a batch compacted into base/ is CLOSED: re-appending it would land a
     // second copy in delta/ (the dynamic overwrite only owns delta) — the
@@ -307,7 +297,6 @@ object Incremental {
       .option("parquet.block.size", LedgerRowGroupBytes.toString)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id").parquet(deltaDir(dir))
-    Dedup.releaseCorpusCaches(batch)
   }
 
   /** The store after appending batches 1..`upTo` IN ORDER (each batch's
@@ -371,7 +360,7 @@ object Incremental {
     if (delta.isDirectory) delta.listFiles().foreach { f =>
       val m = "batch_id=(\\d+)".r.findFirstMatchIn(f.getName)
       if (m.exists(_.group(1).toInt <= upTo))
-        graft.streaming.Streams.deleteRecursively(f)
+        Artifacts.deleteRecursively(f)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.data.Artifacts
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
@@ -346,30 +347,28 @@ object IvfIndex {
     IvfModel(centroids, assigned)
   }
 
-  // Process-level cache of LOADED indexes for the declared query path: the
+  // Registry entry of a LOADED index for the declared query path: the
   // build+save is the offline step a deployment runs ONCE and amortizes
   // across every probe workload (see build's doc). Keyed by (corpus dir,
-  // nClusters); the cached model is parquet-backed, not session memory —
-  // the probe plan reads only routed cells' files.
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), IvfModel]
+  // nClusters); the model is parquet-backed, not session memory — the probe
+  // plan reads only routed cells' files. Released with PqIndex's models.
+  private final case class Index(cacheKey: String, nClusters: Int)
+    extends Artifacts.Key(Artifacts.Family.Ann, "ivf")
 
   /** The persisted index for `cacheKey`'s corpus, building and saving it on
     * first use — the offline step a deployment runs ONCE and amortizes
-    * across every probe workload. */
-  private def cachedIndex(cacheKey: String, corpus: DataFrame, nClusters: Int): IvfModel =
-    indexCache.getOrElseUpdate((cacheKey, nClusters), {
-      // md5 of the key, not hashCode: distinct corpora must never collide
-      // on the same on-disk path (overwrite would corrupt the other's
-      // cached, still-lazily-scanned index)
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val dir = s"${sys.props("java.io.tmpdir")}/graft_ivf_${keyHex}_$nClusters"
+    * across every probe workload. Composed consumers (IVFPQ) pair it with
+    * another index tier. */
+  def cachedIndexFor(cacheKey: String, corpus: DataFrame, nClusters: Int): IvfModel = {
+    val key = Index(cacheKey, nClusters)
+    Artifacts.memo(key, (m: IvfModel) => m.unpersist()) {
+      val dir = Artifacts.dir(key)
       val built = build(corpus, nClusters)
       save(built, dir)
       built.unpersist()
       load(corpus.sparkSession, dir)
-    })
+    }
+  }
 
   /** Scale-correct quantizer size for the IVFPQ tier (r16, the other half
     * of the 20M-recall law next to [[PqIndex.scaledShortlist]]): with a
@@ -396,23 +395,17 @@ object IvfIndex {
   def scaledCells(nVec: Long, floor: Int = 8, cap: Int = 4096): Int =
     math.max(floor, math.min(cap, (math.sqrt(nVec.toDouble) / 8).toInt))
 
-  /** The persisted per-corpus index, for composed consumers (IVFPQ) that
-    * pair it with another index tier. Same build-once semantics as the
-    * cached search paths below. */
-  def cachedIndexFor(cacheKey: String, corpus: DataFrame, nClusters: Int): IvfModel =
-    cachedIndex(cacheKey, corpus, nClusters)
-
   /** Probe against a persisted index for `cacheKey`'s corpus (the declared
     * `sim_ivf_ann` path: probes are served from a LOADED on-disk index,
     * never a per-query refit). */
   def annSearchCached(cacheKey: String, probes: DataFrame, corpus: DataFrame,
       k: Int, nClusters: Int, nProbe: Int): DataFrame =
-    search(cachedIndex(cacheKey, corpus, nClusters), probes, k, nProbe)
+    search(cachedIndexFor(cacheKey, corpus, nClusters), probes, k, nProbe)
 
   /** [[nearDupPairs]] against the same persisted per-corpus index. */
   def nearDupPairsCached(cacheKey: String, probes: DataFrame, corpus: DataFrame,
       threshold: Double, nClusters: Int, nProbe: Int): DataFrame =
-    nearDupPairs(cachedIndex(cacheKey, corpus, nClusters), probes, threshold, nProbe)
+    nearDupPairs(cachedIndexFor(cacheKey, corpus, nClusters), probes, threshold, nProbe)
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication"): cluster-scoped semantic
@@ -666,5 +659,5 @@ object IvfIndex {
   /** [[semDedup]] against the same persisted per-corpus index. */
   def semDedupCached(cacheKey: String, corpus: DataFrame, threshold: Double,
       nClusters: Int, window: Option[Int] = None): DataFrame =
-    semDedup(cachedIndex(cacheKey, corpus, nClusters), threshold, window)
+    semDedup(cachedIndexFor(cacheKey, corpus, nClusters), threshold, window)
 }

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.data.Artifacts
+import graft.data.Artifacts.{Family, Key}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -501,8 +503,7 @@ object PqIndex {
     writeBooks(model.codebooks, "codebooks")
     model.refineCodebooks match {
       case Some(f) => writeBooks(f, "codebooks_fine")
-      case None => graft.streaming.Streams.deleteRecursively(
-        new java.io.File(s"$dir/codebooks_fine")) // a re-save without the tier owns the dir
+      case None => Artifacts.deleteRecursively(s"$dir/codebooks_fine") // a re-save without the tier owns the dir
     }
     // `batch` above `cell` in the layout: appendIvfPq lands each new crawl
     // batch as its own partition tree (batch=N/cell=*), so re-running an
@@ -519,7 +520,7 @@ object PqIndex {
     // legacy marker a prior build left behind
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("lists_base"))
-      .foreach(graft.streaming.Streams.deleteRecursively)
+      .foreach(Artifacts.deleteRecursively)
     java.nio.file.Files.deleteIfExists(manifestPath(dir))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(dir, "_compacted_up_to"))
@@ -624,7 +625,7 @@ object PqIndex {
     } finally encPersisted.unpersist(blocking = false)
     val target = new java.io.File(s"$dir/lists/batch=$batchId")
     target.getParentFile.mkdirs()
-    graft.streaming.Streams.deleteRecursively(target)
+    Artifacts.deleteRecursively(target)
     require(stage.renameTo(target),
       s"appendIvfPq: could not publish $stage as $target")
     loadIvfPq(spark, dir)
@@ -703,7 +704,7 @@ object PqIndex {
     if (delta.isDirectory) delta.listFiles().foreach { f =>
       val m = "batch=(\\d+)".r.findFirstMatchIn(f.getName)
       if (m.exists(_.group(1).toInt <= upTo))
-        graft.streaming.Streams.deleteRecursively(f)
+        Artifacts.deleteRecursively(f)
     }
   }
 
@@ -847,24 +848,13 @@ object PqIndex {
   private def adcTable(pv: Column, cbs: Seq[Seq[Seq[Double]]]): Column =
     graft.functions.AdcTable.of(pv, cbs)
 
-  // per-corpus residual-IVFPQ cache of LOADED indexes (build+save once,
-  // probe-many — the IvfIndex.cachedIndex idiom: the cached model is
+  // per-corpus residual-IVFPQ registry entry of a LOADED index (build+save
+  // once, probe-many — as IvfIndex.cachedIndexFor: the model is
   // parquet-backed, not session memory, so the demonstrated ANN crossover
-  // survives a restart and the probe plan prunes routed cells' files)
-  private val ivfPqCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Int, Int), IvfPqModel]
-
-  // md5 of the key, not hashCode: distinct corpora must never collide
-  // on one on-disk path (the IvfIndex.cachedIndex rationale)
-  private def ivfPqDir(cacheKey: String, m: Int, ksub: Int, nClusters: Int,
-      refineKsub: Int = 0): String = {
-    val keyHex = java.security.MessageDigest.getInstance("MD5")
-      .digest(cacheKey.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    // the refine tier changes the persisted schema — a refined store must
-    // never collide with a pre-r17 cross-session dir lacking codes_fine
-    val rSuffix = if (refineKsub > 0) s"_r$refineKsub" else ""
-    s"${sys.props("java.io.tmpdir")}/graft_ivfpq_${keyHex}_${m}_${ksub}_$nClusters$rSuffix"
-  }
+  // survives a restart and the probe plan prunes routed cells' files). The
+  // refine tier is part of the key: it changes the persisted schema.
+  private final case class IvfPq(cacheKey: String, m: Int, ksub: Int, nClusters: Int,
+      refineKsub: Int) extends Key(Family.Ann, "ivfpq")
 
   /** MUTATION CONTRACT: `cacheKey` names a persisted STORE, not a frozen
     * snapshot — [[cachedIvfPqAppend]] lands new batches in the same dir,
@@ -875,14 +865,18 @@ object PqIndex {
     * sim_ivfpqr_append query keys its day-1 base as `d + "#ivfpqr-day1"`
     * for precisely this reason — a suffixed key is a different dir). */
   def cachedIvfPq(cacheKey: String, ivf: IvfModel, corpus: DataFrame,
-      m: Int, ksub: Int, nClusters: Int, refineKsub: Int = 0): IvfPqModel =
-    ivfPqCache.getOrElseUpdate((cacheKey, m, ksub, nClusters, refineKsub), {
-      val dir = ivfPqDir(cacheKey, m, ksub, nClusters, refineKsub)
+      m: Int, ksub: Int, nClusters: Int, refineKsub: Int = 0): IvfPqModel = {
+    val key = IvfPq(cacheKey, m, ksub, nClusters, refineKsub)
+    Artifacts.memo(key, unpersistModel) {
+      val dir = Artifacts.dir(key)
       val built = buildIvfPq(ivf, corpus, m, ksub, refineKsub)
       saveIvfPq(built, dir)
       built.unpersist()
       loadIvfPq(corpus.sparkSession, dir)
-    })
+    }
+  }
+
+  private val unpersistModel = (m: IvfPqModel) => m.unpersist()
 
   /** Append `newVecs` into the PERSISTED index cached for `cacheKey`
     * (building+saving the base first if this session hasn't), then refresh
@@ -892,15 +886,15 @@ object PqIndex {
       newVecs: DataFrame, m: Int, ksub: Int, nClusters: Int,
       batchId: Int = 1, refineKsub: Int = 0): IvfPqModel = {
     val base = cachedIvfPq(cacheKey, ivf, baseCorpus, m, ksub, nClusters, refineKsub)
-    val dir = ivfPqDir(cacheKey, m, ksub, nClusters, refineKsub)
+    val key = IvfPq(cacheKey, m, ksub, nClusters, refineKsub)
+    val dir = Artifacts.dir(key)
     // a batch already compacted into lists_base/ is already IN the store —
     // the append's idempotent outcome — so re-applying it would both fail
     // the closed-batch guard and be pointless: just reload
     val appended =
       if (batchId <= compactedUpTo(dir)) loadIvfPq(baseCorpus.sparkSession, dir)
       else appendIvfPq(ivf, base, newVecs, dir, batchId)
-    ivfPqCache.put((cacheKey, m, ksub, nClusters, refineKsub), appended)
-    appended
+    Artifacts.put(key, appended, unpersistModel)
   }
 
   /** Compact the persisted index cached for `cacheKey` (ensuring the base
@@ -911,25 +905,24 @@ object PqIndex {
       upTo: Int = 1, refineKsub: Int = 0): IvfPqModel = {
     cachedIvfPqAppend(cacheKey, ivf, baseCorpus, newVecs, m, ksub, nClusters,
       refineKsub = refineKsub)
-    val dir = ivfPqDir(cacheKey, m, ksub, nClusters, refineKsub)
+    val key = IvfPq(cacheKey, m, ksub, nClusters, refineKsub)
+    val dir = Artifacts.dir(key)
     compactIvfPq(baseCorpus.sparkSession, dir, upTo)
-    val reloaded = loadIvfPq(baseCorpus.sparkSession, dir)
-    ivfPqCache.put((cacheKey, m, ksub, nClusters, refineKsub), reloaded)
-    reloaded
+    Artifacts.put(key, loadIvfPq(baseCorpus.sparkSession, dir), unpersistModel)
   }
 
   // per-corpus model cache — the offline/online split (the IvfIndex
   // precedent): the declared ANN query measures probe time, the build
   // cost is declared separately via sim_pq_build
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int, Boolean), PqModel]
+  private final case class Pq(cacheKey: String, m: Int, ksub: Int, opq: Boolean)
+    extends Key(Family.Ann, "pq")
 
   /** The shared per-corpus model (the d0_cache_build precedent: the
     * declared sim_pq_build line owns the train+encode cost; probe queries
     * reuse the encoded corpus). */
   def cachedModel(cacheKey: String, corpus: DataFrame,
       m: Int = 8, ksub: Int = 16, opq: Boolean = false): PqModel =
-    modelCache.getOrElseUpdate((cacheKey, m, ksub, opq),
+    Artifacts.memo(Pq(cacheKey, m, ksub, opq), (p: PqModel) => p.unpersist())(
       build(corpus, m, ksub, opq))
 
   def searchCached(cacheKey: String, probes: DataFrame, corpus: DataFrame,
@@ -944,39 +937,31 @@ object PqIndex {
   // run; at sf10 that is 4 shuffles of a 2M-row table to serve 4 probe
   // batches). The store is immutable between appends — input files key the
   // cache, so an append/compact (new file set) naturally invalidates.
-  private val fanOutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private final case class FanOut(plan: String, files: Seq[String]) extends Key(Family.Ann, "fanout")
 
   private def fannedCodes(cellCodes: DataFrame): DataFrame = {
     val par = cellCodes.sparkSession.sparkContext.defaultParallelism
     if (cellCodes.rdd.getNumPartitions >= par) cellCodes
     else {
-      val planKey = cellCodes.queryExecution.analyzed.canonicalized.toString
-      val fileKey = cellCodes.inputFiles.toSeq.sorted.mkString(",")
-      fanOutCache.getOrElseUpdate((planKey, fileKey), {
+      val plan = cellCodes.queryExecution.analyzed.canonicalized.toString
+      Artifacts.persist(FanOut(plan, cellCodes.inputFiles.toSeq.sorted)) {
         // evict superseded fan-outs of the SAME store before inserting
         // (r18, advice): an append lands a new file set under the same
         // plan shape, and the prior entry's persisted full copy of the
         // code table would otherwise stay pinned until releaseModels —
         // repeated appends accumulated duplicate copies in the storage
         // region
-        fanOutCache.keys.filter(_._1 == planKey).toSeq.foreach(k =>
-          fanOutCache.remove(k).foreach(_.unpersist(blocking = false)))
-        cellCodes.repartition(par).persist(StorageLevel.MEMORY_AND_DISK)
-      })
+        Artifacts.releaseWhere {
+          case FanOut(p, _) => p == plan
+          case _ => false
+        }
+        cellCodes.repartition(par)
+      }
     }
   }
 
-  /** Unpersist every cached model's encoded frame and clear the cache —
-    * the Dedup.releaseCaches / Scans.releaseLayouts idiom, called from the
-    * same end-of-run release blocks so a long-lived shared JVM (test
-    * suites, interactive sessions) doesn't keep the blocks pinned. */
-  def releaseModels(): Unit = {
-    modelCache.values.foreach(_.unpersist())
-    modelCache.clear()
-    ivfPqCache.values.foreach(_.unpersist())
-    ivfPqCache.clear()
-    fanOutCache.values.foreach(_.unpersist(blocking = false))
-    fanOutCache.clear()
-  }
+  /** Release every ANN-family entry: the PQ, IVF and IVFPQ models, their
+    * persisted index dirs and the fanned-out code tables (end of run; the
+    * dedup family's mid-run release leaves these alive). */
+  def releaseModels(): Unit = Artifacts.release(Family.Ann)
 }

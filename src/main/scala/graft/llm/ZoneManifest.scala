@@ -78,7 +78,7 @@ private[llm] final class ZoneManifest(
       .filter(f => f.isDirectory && f.getName != liveBase &&
         (f.getName == legacyBaseName ||
           f.getName.startsWith(legacyBaseName + "_v")))
-      .foreach(graft.streaming.Streams.deleteRecursively)
+      .foreach(graft.data.Artifacts.deleteRecursively)
     if (Files.exists(path(dir)))
       Files.deleteIfExists(Paths.get(dir, legacyMarkerName))
   }

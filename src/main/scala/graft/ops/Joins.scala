@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.data.Tables
+import graft.data.{Artifacts, Tables}
 import graft.ops.Exact._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -291,17 +291,20 @@ object Joins {
   * it). 16 buckets at any SF: bucket COUNT is a layout constant chosen
   * for the cluster (it must match across tables to co-locate), not a
   * per-corpus tunable. The pre-write repartition on the bucket key gives
-  * one file per bucket, which keeps the per-bucket sort metadata usable. */
+  * one file per bucket, which keeps the per-bucket sort metadata usable.
+  * The table dirs are a registry tmp dir released with the Scans family;
+  * a later ensure drops and rewrites the tables. */
 object BucketedLayout {
   val NumBuckets = 16
-  private val built = scala.collection.concurrent.TrieMap[String, (String, String)]()
+  private final case class Bucketed(d: String)
+    extends Artifacts.Key(Artifacts.Family.Scans, "j12")
 
   def ensure(s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
-    built.getOrElseUpdate(d, {
+    Artifacts.memo(Bucketed(d)) {
       val suffix = math.abs(d.hashCode).toString
       val ordersTbl = s"graft_j12_orders_$suffix"
       val lineitemTbl = s"graft_j12_lineitem_$suffix"
-      val base = s"${sys.props("java.io.tmpdir")}/graft_j12_$suffix"
+      val base = Artifacts.dir(Bucketed(d))
       def write(name: String, df: org.apache.spark.sql.DataFrame, key: String): Unit = {
         if (s.catalog.tableExists(name)) s.sql(s"DROP TABLE $name")
         df.repartition(NumBuckets, col(key))
@@ -315,5 +318,5 @@ object BucketedLayout {
       write(lineitemTbl, Tables(s, d, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"), "l_orderkey")
       (ordersTbl, lineitemTbl)
-    })
+    }
 }

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.data.Tables
+import graft.data.{Artifacts, Tables}
+import graft.data.Artifacts.{Family, Key}
 import graft.ops.QueryDef
 import graft.ops.Exact._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger}
 
 /** One event as seen by the stateful FSM (ts kept as µs long — state
   * comparisons stay primitive). */
@@ -67,10 +68,16 @@ object Streams {
 
   private val runCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // schema per staged dir — every declared streaming query re-derives it, and
-  // a batch-side parquet footer read per query build is pure constant overhead
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  // Registry keys (Streams family): a source table staged as a dir, its
+  // schema, and the per-run sink/checkpoint dirs. The schema is memoized
+  // because every declared streaming query re-derives it, and a batch-side
+  // parquet footer read per query build is pure constant overhead.
+  private final case class Staged(d: String, table: String) extends Key(Family.Streams, table)
+  private final case class Schema(dir: String) extends Key(Family.Streams, "schema")
+  private final case class Run(override val kind: String, id: Int) extends Key(Family.Streams, kind)
+
+  private def schemaOf(s: SparkSession, dir: String) =
+    Artifacts.memo(Schema(dir))(s.read.parquet(dir).schema)
 
   /** Streaming view of the events table (T1 ingestion): file-source
     * readStream with the batch schema, ns→µs ts conversion as in Tables. */
@@ -86,8 +93,7 @@ object Streams {
     // entry, leaving a sourceless stream — the sf1 full-suite run hit
     // exactly that as UNABLE_TO_INFER_SCHEMA ×9).
     val dir = streamSourceDir(s, d, "events")
-    val schema = schemaCache.getOrElseUpdate(dir.toString, s.read.parquet(dir.toString).schema)
-    val reader = s.readStream.schema(schema)
+    val reader = s.readStream.schema(schemaOf(s, dir.toString))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     graft.data.Tables.normalizeEventTs(reader.parquet(dir.toString))
   }
@@ -105,8 +111,7 @@ object Streams {
       name: String): java.nio.file.Path = {
     val src = java.nio.file.Paths.get(s"$d/$name.parquet")
     val dir = if (java.nio.file.Files.isDirectory(src)) src else {
-      val staging = java.nio.file.Paths.get(
-        s"${sys.props("java.io.tmpdir")}/graft_${name}_${math.abs(d.hashCode)}")
+      val staging = java.nio.file.Paths.get(Artifacts.dir(Staged(d, name)))
       java.nio.file.Files.createDirectories(staging)
       val staged = staging.resolve(s"$name.parquet")
       if (!java.nio.file.Files.exists(staged) ||
@@ -143,16 +148,22 @@ object Streams {
     * aggregations. */
   def documentsStream(s: SparkSession, d: String): DataFrame = {
     val dir = streamSourceDir(s, d, "documents")
-    val schema = schemaCache.getOrElseUpdate(dir.toString, s.read.parquet(dir.toString).schema)
-    s.readStream.schema(schema).parquet(dir.toString)
+    s.readStream.schema(schemaOf(s, dir.toString)).parquet(dir.toString)
   }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a memory
     * sink; returns the drained table. Fresh checkpoint per run so re-running
     * the same declared query re-processes the source. */
   def runToTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft_ckpt_${name}_${System.nanoTime()}"
+    val id = runCounter.incrementAndGet()
+    drain(s, stream, mode, id)(_.format("memory").queryName(s"graft_stream_$id"))
+    s.table(s"graft_stream_$id")
+  }
+
+  /** Run `stream` to completion (AvailableNow) through `sink` on a fresh
+    * checkpoint, released when the drain ends. */
+  private def drain(s: SparkSession, stream: DataFrame, mode: String, id: Int)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
     // a streaming query's shuffle-partition count = its state-store count,
     // fixed at first checkpoint — size it to the keyspace, not to the batch
     // session's scan parallelism. Per-partition store cost is CONSTANT
@@ -163,22 +174,17 @@ object Streams {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
     val restoreNoData = disableNoDataBatch(s)
-    try {
-      val q = stream.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
+    try sink(stream.writeStream.outputMode(mode))
+      .option("checkpointLocation", Artifacts.dir(Run("ckpt", id)))
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    finally {
       s.conf.set("spark.sql.shuffle.partitions", prev)
       restoreNoData()
       // in finally, not after: a failed/interrupted replay must not leak
       // its checkpoint (safe either way — one-shot replays never restart)
-      deleteRecursively(new java.io.File(ckpt))
+      Artifacts.release(Run("ckpt", id))
     }
-    s.table(name)
   }
 
   /** Skip the trailing no-data micro-batch on these bounded drains. With a
@@ -221,60 +227,29 @@ object Streams {
     * distributed. This is also the production shape (streams end in a
     * sink, not in driver memory). */
   def runToParquetTable(s: SparkSession, stream: DataFrame, mode: String): DataFrame = {
-    val name = s"graft_stream_${runCounter.incrementAndGet()}"
-    val out = s"${sys.props("java.io.tmpdir")}/graft_sink_${name}_${System.nanoTime()}"
-    val ckpt = s"${out}_ckpt"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s))
-    val restoreNoData = disableNoDataBatch(s)
-    // register the sink dir for end-of-session cleanup BEFORE the run: a
-    // stream that fails mid-way has already landed batches there, and a
-    // post-run registration would leak exactly the failed runs' output
-    sinkDirs.add(out)
-    try {
-      val saveMode = if (mode == "complete") "overwrite" else "append"
-      val q = stream.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode(saveMode).parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      restoreNoData()
-      deleteRecursively(new java.io.File(ckpt))
-    }
+    val id = runCounter.incrementAndGet()
+    // the sink dir is registered BEFORE the run: a stream that fails
+    // mid-way has already landed batches there, and a post-run
+    // registration would leak exactly the failed runs' output
+    val out = Artifacts.dir(Run("sink", id))
+    val saveMode = if (mode == "complete") "overwrite" else "append"
+    drain(s, stream, mode, id)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      batch.write.mode(saveMode).parquet(out)
+    })
     // the sink dir is read back LAZILY by the caller — it cannot be
     // deleted here; releaseSinks() reclaims it at end of session
     s.read.parquet(out)
   }
 
-  private val sinkDirs = java.util.Collections.synchronizedSet(
-    new java.util.LinkedHashSet[String]())
-
-  /** Delete every parquet sink dir landed by runToParquetTable this
-    * session (Verify/Bench call this next to Dedup.releaseCaches). Deferred
-    * because the returned tables are lazy scans over those dirs — deleting
-    * eagerly would fail the consumer's read. */
-  def releaseSinks(): Unit = {
-    sinkDirs.forEach(d => deleteRecursively(new java.io.File(d)))
-    sinkDirs.clear()
-  }
-
-  /** Drop a finished bounded replay's checkpoint (state deltas can run to
-    * hundreds of MB per stream at the 100× corpus; a bench session runs
-    * ~10 streams and repeated sessions ballooned /tmp by GBs). Only
-    * correct because these AvailableNow replays are one-shot: the result
-    * is already materialized in the sink, and nothing ever restarts from
-    * the checkpoint. A production stream KEEPS its checkpoint — it is the
-    * restart contract. */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
+  /** Release every Streams-family entry: the sink dirs landed by the
+    * drains this session, the staged source dirs and their schemas.
+    * Deferred because the returned tables are lazy scans over those dirs —
+    * deleting eagerly would fail the consumer's read. A drain's checkpoint
+    * is released as soon as the drain finishes (state deltas can run to
+    * hundreds of MB per stream at the 100× corpus): these AvailableNow
+    * replays are one-shot, and nothing ever restarts from the checkpoint. A
+    * production stream KEEPS its checkpoint — it is the restart contract. */
+  def releaseSinks(): Unit = Artifacts.release(Family.Streams)
 
   /** T6 FSM over a typed stream: per-user state folded across micro-batches
     * with mapGroupsWithState (reference: trial status FSM maggy/trial.py:33-37,
@@ -511,7 +486,7 @@ object Streams {
       """SELECT event_type, count(*) AS n,
         |       round(CAST(sum(CAST(value AS DECIMAL(22,8))) AS DOUBLE), 2) AS total
         |FROM events GROUP BY event_type""".stripMargin) { (s, d) =>
-      val sink = s"${sys.props("java.io.tmpdir")}/graft_stream_sink_${math.abs(d.hashCode)}_${System.nanoTime()}"
+      val sink = Artifacts.dir(Run("stream_sink", runCounter.incrementAndGet()))
       val ckpt = s"$sink/_checkpoints"
       val q = eventsStream(s, d)
         .select("event_id", "event_type", "value")
@@ -636,10 +611,9 @@ object Streams {
         .select("vec_id", "embedding")
       // land the probe set as a 4-file dir so the file source genuinely
       // streams it as 4 micro-batches (maxFilesPerTrigger = 1)
-      val root = s"${sys.props("java.io.tmpdir")}/graft_stream_ann_${math.abs(d.hashCode)}_${System.nanoTime()}"
+      val root = Artifacts.dir(Run("stream_ann", runCounter.incrementAndGet()))
       probes.repartition(4).write.parquet(s"$root/probes")
       val out = s"$root/out"
-      sinkDirs.add(root)
       val stream = s.readStream.schema(probes.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$root/probes")
       // corpus size (→ scaled shortlist) is a property of the SERVED

@@ -30,7 +30,10 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
   // if the boot actually succeeded — forcing it here would re-run the
   // whole (possibly already-failed) cluster boot in teardown.
   @volatile private var booted = false
-  override def afterAll(): Unit = if (booted) spark.stop()
+  override def afterAll(): Unit = {
+    graft.data.Artifacts.releaseAll()
+    if (booted) spark.stop()
+  }
 
   // A Try inside the lazy val memoizes boot FAILURE too: a thrown lazy-val
   // initializer is retried on every access, so without this a failed
@@ -198,7 +201,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(StreamPlateau.Check(q, "mc-dedup", needRemoved = true)))
     } finally {
       try q.stop() catch { case _: Throwable => }
-      graft.streaming.Streams.deleteRecursively(new java.io.File(ckpt))
+      graft.data.Artifacts.deleteRecursively(ckpt)
     }
   } }
 
@@ -305,7 +308,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"no replacement executor after kill: $healed")
     } finally {
       try q.stop() catch { case _: Throwable => }
-      graft.streaming.Streams.deleteRecursively(new java.io.File(base))
+      graft.data.Artifacts.deleteRecursively(base)
     }
   } }
 

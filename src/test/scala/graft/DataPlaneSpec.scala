@@ -1,8 +1,8 @@
 package graft
 
-import graft.data.Tables
+import graft.data.{Artifacts, Frames, Tables}
 import graft.llm.{Dedup, IvfIndex, Multimodal, Similarity}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,14 +16,10 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.01"
 
-  // honor Frames' cleanup contract: t14-style queries register tracked
-  // checkpoints per build; release them (and the shared dedup caches)
-  // when the suite finishes instead of pinning blocks until JVM exit
-  override def afterAll(): Unit = {
-    graft.llm.Dedup.releaseCaches()
-    graft.data.Frames.releaseTracked()
-    graft.ops.Scans.releaseLayouts()
-  }
+  // release every registry entry (tracked checkpoints, shared caches,
+  // tmp dirs) when the suite finishes instead of pinning blocks and dirs
+  // until JVM exit
+  override def afterAll(): Unit = graft.data.Artifacts.releaseAll()
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -603,7 +599,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fine subspace sizing: widest ≤4-dim split that divides dim
     assert(graft.llm.PqIndex.refineM(256) == 64 && graft.llm.PqIndex.refineM(64) == 16 &&
       graft.llm.PqIndex.refineM(6) == 2 && graft.llm.PqIndex.refineM(7) == 7)
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Artifacts.deleteRecursively(dir)
     ivf.unpersist(); res.unpersist()
   }
 
@@ -1351,7 +1347,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(i => md5hex(ts.slice(i, i + 5).mkString(" "))).min
     }.toMap
     assert(got == expected, s"clamped-slice fingerprints diverged: $got vs $expected")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Artifacts.deleteRecursively(dir)
   }
 
   test("t14 handles a corpus-universal gram: df=n_docs counted by aggregate, values exact") {
@@ -1386,7 +1382,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the universal grams really are universal (df = n_docs) — the skew
     // shape is present, not hypothetical
     assert(df.values.max == nDocs, s"fixture lost its universal gram: max df = ${df.values.max}")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Artifacts.deleteRecursively(dir)
   }
 
   test("t15 Moore-Lewis score matches a Scala-side recount; both keep outcomes occur") {
@@ -1844,7 +1840,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"banding persisted signatures must surface the planted near-dup pair: $cands")
     assert(!cands.contains((109L, 12L)) && !cands.contains((119L, 12L)),
       s"unrelated docs must not collide in any band: $cands")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Artifacts.deleteRecursively(dir)
   }
 
   test("x11 day-N ledger: planted dups across EVERY batch pair drop; mid-sequence re-append is idempotent; compaction preserves store + probes") {
@@ -1950,7 +1946,7 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(s"$storeDir/delta/batch_id=1")
     assert(storeRows() == before,
       "stale delta tree at/below the compaction marker must be filtered, not double-counted")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(dir))
+    graft.data.Artifacts.deleteRecursively(dir)
   }
 
   test("planted join skew: AQE splits the hot partition, answer unchanged (the SkewProbe case)") {
@@ -2074,6 +2070,122 @@ class DataPlaneSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(overlapping(ls) == ls.size, "linear: suppkey slice should hit every file")
     assert(overlapping(zs) < zs.size,
       s"z-order: suppkey slice must PRUNE files (${overlapping(zs)}/${zs.size})")
-    graft.streaming.Streams.deleteRecursively(new java.io.File(base))
+    graft.data.Artifacts.deleteRecursively(base)
+  }
+
+  // ---- the artifact registry's lifecycle contract: whatever a query
+  // family caches, checkpoints or lands in a tmp dir is a registry entry,
+  // one Artifacts.releaseAll() frees all of it, a scoped build frees what it
+  // created for itself, and tmp dirs are per JVM
+
+  /** Start from an empty registry and no cached blocks, so the checks see
+    * only what the test itself created (earlier tests share the session). */
+  private def freshRegistry(): Unit = {
+    Artifacts.releaseAll()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
+
+  private val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+
+  /** graft_* entries under tmpdir that this JVM created. */
+  private def ownDirs: Set[String] = Option(tmp.list()).getOrElse(Array.empty[String])
+    .filter(n => n.startsWith("graft_") && n.endsWith("_" + Artifacts.nonce)).toSet
+
+  private def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  /** Run a declared query and collect it; its per-query checkpoints are
+    * released afterwards, as Bench and Verify do. */
+  private def rows(name: String): Set[Row] = {
+    val out = SparkEntry.queries(name)(spark, sf).collect().toSet
+    Frames.releaseTracked()
+    out
+  }
+
+  /** Live entries that hold storage (driver-side memo values hold none). */
+  private def liveStorage: Set[Artifacts.Key] =
+    Artifacts.live.filterNot(_.family == Artifacts.Family.Values).toSet
+
+  private def withSigBound[T](bound: Long)(body: => T): T = {
+    val default = Dedup.sigCacheMaxRows
+    Dedup.sigCacheMaxRows = bound
+    try body finally Dedup.sigCacheMaxRows = default
+  }
+
+  test("one query per family, then releaseAll: no cached block, no live entry, no tmp dir of this JVM; re-runs repeat") {
+    freshRegistry()
+    val names = Seq("d3_minhash_pairs", "sim_ivfpqr_build", "sim_ivfpqr_ann",
+      "x11_ledger_build", "x11c_ledger_append", "st_stream_session",
+      "s4_text_scan", "s9_schema_write")
+    val first = names.map(n => n -> rows(n)).toMap
+    // the families did leave state behind, so the empty checks mean something
+    assert(cachedRdds.nonEmpty && Artifacts.live.nonEmpty, "the queries registered no state")
+    val kinds = ownDirs.map(_.stripPrefix("graft_").takeWhile(_ != '_'))
+    assert(Set("ledger", "ivf", "ivfpq", "events", "sink", "s4", "s9").subsetOf(kinds),
+      s"expected one tmp dir per family, found ${ownDirs.mkString(", ")}")
+
+    Artifacts.releaseAll()
+    assert(spark.sparkContext.getRDDStorageInfo.isEmpty,
+      s"cached blocks left after releaseAll: ${spark.sparkContext.getRDDStorageInfo.map(_.name).mkString(", ")}")
+    assert(Artifacts.live.isEmpty, s"live entries after releaseAll: ${Artifacts.live.mkString(", ")}")
+    assert(ownDirs.isEmpty, s"tmp dirs left after releaseAll: ${ownDirs.mkString(", ")}")
+
+    // a released ledger (and its append guard) and a released index rebuild
+    // on the same corpus: the append must not be skipped, and both answers
+    // must repeat
+    for (n <- Seq("x11c_ledger_append", "sim_ivfpqr_ann"))
+      assert(rows(n) == first(n), s"$n changed after releaseAll and a re-run")
+    Artifacts.releaseAll()
+  }
+
+  test("ledger build and append above the sig bound free what they tracked; below it x11c reads the corpus sig store") {
+    freshRegistry()
+    withSigBound(0L) {
+      // the holdout gram set is shared with every decontamination stage,
+      // not build-local: warm it so the build's own footprint is all that
+      // the checks below see
+      Dedup.probeGramSet(Tables(spark, sf, "documents").filter(col("doc_id") % 10 === 0)).count()
+      val liveBefore = liveStorage
+      val rddsBefore = cachedRdds
+      rows("x11_ledger_build")
+      rows("x11c_ledger_append")
+      val added = (liveStorage -- liveBefore).map(_.kind)
+      assert(added == Set("ledger", "appended", "doccount"),
+        s"the cold above-bound build and append left entries: $added")
+      assert(cachedRdds == rddsBefore,
+        s"the cold above-bound build and append left cached blocks: ${cachedRdds -- rddsBefore}")
+    }
+
+    Artifacts.releaseAll()
+    rows("x11_ledger_build")
+    val afterBuild = liveStorage
+    assert(afterBuild.count(_.kind == "sigstore") == 1,
+      "below the bound the ledger build creates the corpus-wide sig store")
+    val rddsAfterBuild = cachedRdds
+    rows("x11c_ledger_append")
+    assert((liveStorage -- afterBuild).map(_.kind) == Set("appended"),
+      "x11c must reuse the corpus sig store, not build its own signatures")
+    assert(cachedRdds == rddsAfterBuild, "x11c cached a block of its own")
+    Artifacts.releaseAll()
+  }
+
+  test("releaseAll deletes this JVM's sigstore and ledger dirs and leaves another process's") {
+    freshRegistry()
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(sf.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // another process's dirs: the md5-only ledger name (one store per
+    // corpus, shared by every JVM) and nonce'd names of a different JVM
+    val foreign = Seq(s"graft_ledger_$md5", "graft_sigstore_0123456789abcdef_1x0",
+      "graft_ledger_0123456789abcdef_1x0").map(new java.io.File(tmp, _))
+    foreign.foreach { f => f.mkdirs(); new java.io.File(f, "part-0.parquet").createNewFile() }
+    try withSigBound(0L) {
+      rows("d3_minhash_pairs") // above the bound: the disk-backed sig store
+      rows("x11_ledger_build")
+      assert(ownDirs.exists(_.startsWith("graft_sigstore_")) && ownDirs.exists(_.startsWith("graft_ledger_")),
+        s"expected this JVM's sigstore and ledger dirs, found ${ownDirs.mkString(", ")}")
+      Artifacts.releaseAll()
+      assert(ownDirs.isEmpty, s"this JVM's dirs survived releaseAll: ${ownDirs.mkString(", ")}")
+      foreign.foreach(f => assert(new java.io.File(f, "part-0.parquet").exists,
+        s"another process's dir was touched: $f"))
+    } finally foreign.foreach(Artifacts.deleteRecursively)
   }
 }

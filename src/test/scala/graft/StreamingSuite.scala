@@ -4,6 +4,7 @@ import graft.data.Tables
 import graft.streaming.{Ev, Streams, TypeCountProcessor}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming validation: every streaming query must equal its
@@ -12,9 +13,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-micro-batch replay — a single AvailableNow batch would not
   * exercise cross-trigger state at all.
   */
-class StreamingSuite extends AnyFunSuite {
+class StreamingSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
+
+  // the drains' staged source dirs and sinks are registry entries
+  override def afterAll(): Unit = graft.data.Artifacts.releaseAll()
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -252,7 +256,7 @@ class StreamingSuite extends AnyFunSuite {
           keyspaceBound = Some(200L))))
     } finally {
       qs.foreach(q => try q.stop() catch { case _: Throwable => })
-      Streams.deleteRecursively(new java.io.File(tmp))
+      graft.data.Artifacts.deleteRecursively(tmp)
     }
   }
 }
