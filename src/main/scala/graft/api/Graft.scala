@@ -58,7 +58,7 @@ object Graft {
       // one long-running task per executor slot (reference spark_driver.py:136-145)
       sc.parallelize(0 until numExecutors, numExecutors).foreachPartition { it =>
         val pid = it.next()
-        TrialExecutor.run(pid, host, port, secret, hb, pollIntervalMs = 50, trainFn)
+        TrialExecutor.run(pid, host, port, secret, hb, trainFn)
       }
       sc.clearJobGroup()
     }
@@ -218,7 +218,7 @@ object Graft {
         var done = false
         while (!done && attempt < maxAttempts) {
           attempt += 1
-          try { TrialExecutor.run(pid, host, port, secret, hbIntervalMs, pollIntervalMs = 50, trainFn); done = true }
+          try { TrialExecutor.run(pid, host, port, secret, hbIntervalMs, trainFn); done = true }
           catch {
             case e: Throwable =>
               if (attempt >= maxAttempts) {

@@ -6,20 +6,31 @@ import graft.optimize._
 import java.io.{DataInputStream, DataOutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.security.SecureRandom
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue}
+import java.util.concurrent.Semaphore
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Driver-side experiment server (reference: maggy/core/rpc.py:260-511 +
   * maggy/core/experiment_driver/).
   *
   * Threads: accept loop + one handler per executor connection (stands in for
   * the reference's select() listener, rpc.py:350-385) + a metric digestion
-  * thread consuming a blocking queue (reference spark_driver.py:211-236 —
-  * which busy-polls; this one blocks, as SURVEY §4.2 recommends). Scheduling
-  * state is guarded by one monitor: GET/FINAL are synchronous so a freed
-  * executor is reassigned immediately — the async-scheduling core
-  * (reference optimization_driver.py:485-541).
+  * thread that blocks until a point arrives (reference
+  * spark_driver.py:211-236 — which busy-polls; this one blocks, as SURVEY
+  * §4.2 recommends). Handlers append each point to its trial's history;
+  * the digester runs the early-stop rule on the points' cadence.
+  *
+  * Scheduling state is guarded by one monitor, and a slot turns over in one
+  * round trip (the async-scheduling core, reference
+  * optimization_driver.py:485-541): FINAL carries the slot's partition and
+  * the reporter's last (step, value), appends that point to the trial's
+  * history, finalizes the trial and replies with the slot's next assignment
+  * exactly as a GET would. A GET (or FINAL) that finds the optimizer Idle
+  * parks on the monitor until a FINAL, an error, a lost-trial REG, Done or
+  * [[stop]] changes what it could be handed, and replies IDLE only after
+  * [[DriverServer.ParkMs]]; the executor asks again at once. Each REG of a
+  * partition starts a new registration epoch: a request parked under an
+  * older epoch belongs to a dead task attempt and is answered GSTOP, never
+  * handed a trial that nobody would run.
   */
 final class DriverServer(
     optimizer: Optimizer,
@@ -39,11 +50,12 @@ final class DriverServer(
   private var serverSocket: ServerSocket = _
   @volatile private var running = false
 
-  /** partition -> registered flag (reservation registry; reference rpc.py:45-123). */
-  val reservations: ConcurrentHashMap[Integer, java.lang.Long] = new ConcurrentHashMap()
-
-  private val metricQueue = new LinkedBlockingQueue[(String, Long, Double)]()
+  // one permit per metric point not yet counted by the early-stop cadence
+  private val undigested = new Semaphore(0)
   private val lock = new Object
+  // partition -> registration epoch, bumped by every REG (reservation
+  // registry; reference rpc.py:45-123)
+  private val epochs = mutable.Map.empty[Int, Long]
   // trials by id, including running ones (trial store; optimization_driver.py:219-226)
   private val trials = mutable.Map.empty[String, Trial]
   @volatile var experimentDone = false
@@ -68,6 +80,7 @@ final class DriverServer(
 
   def stop(): Unit = {
     running = false
+    lock.synchronized(lock.notifyAll())
     if (serverSocket != null) serverSocket.close()
   }
 
@@ -108,7 +121,11 @@ final class DriverServer(
   private def handle(msg: Map[String, String]): Map[String, String] = msg("type") match {
     case MsgType.Reg => lock.synchronized {
       val p = msg("partition").toInt
-      val fresh = reservations.put(p, System.currentTimeMillis()) == null
+      val fresh = !epochs.contains(p)
+      epochs(p) = epochs.getOrElse(p, 0L) + 1
+      // wakes a GET parked by this partition's dead attempt (it answers
+      // GSTOP) and any GET a freed optimizer slot can now serve
+      lock.notifyAll()
       if (!fresh) {
         // re-registration = Spark retried the task after the executor died;
         // any trial still assigned to this partition was lost mid-run —
@@ -126,35 +143,30 @@ final class DriverServer(
       Map("type" -> MsgType.Ok)
     }
 
-    case MsgType.Get => lock.synchronized {
-      if (experimentDone) Map("type" -> MsgType.GStop)
-      else optimizer.getSuggestion(None) match {
-        case NewTrial(t) =>
-          t.status = TrialStatus.Running
-          t.assignedPartition = Some(msg("partition").toInt)
-          t.startMs = System.currentTimeMillis()
-          trials(t.trialId) = t
-          optimizer.noteStarted(t)
-          Map("type" -> MsgType.Trial, "trial_id" -> t.trialId,
-            "budget" -> t.budget.map(_.toString).getOrElse("")) ++
-            ParamsCodec.encode(t.paramsSansBudget)
-        case Idle => Map("type" -> MsgType.Idle)
-        case Done =>
-          experimentDone = true
-          Map("type" -> MsgType.GStop)
-      }
-    }
+    case MsgType.Get => lock.synchronized(assign(msg("partition").toInt))
 
     case MsgType.Metric =>
       val id = msg("trial_id")
-      metricQueue.put((id, msg("step").toLong, msg("value").toDouble))
-      // STOP ride-along on the heartbeat ack (reference rpc.py:447-461)
+      // history is appended here, in the order the slot's requests arrive,
+      // so a later FINAL's point can never overtake an earlier heartbeat's
+      lock.synchronized(trials.get(id).foreach(
+        _.appendMetric(msg("step").toLong, msg("value").toDouble)))
+      undigested.release()
+      // STOP ride-along on the heartbeat ack (reference rpc.py:447-461),
+      // read after the digester was handed the point, so a check this point
+      // triggers may already have set it
       val stop = lock.synchronized(trials.get(id).exists(_.earlyStop))
       Map("type" -> (if (stop) MsgType.Stop else MsgType.Ok))
 
     case MsgType.Final => lock.synchronized {
       val id = msg("trial_id")
       trials.get(id).foreach { t =>
+        // the reporter's last point, which the slot's heartbeat may not have
+        // shipped: the finalized trial's history ends at its last broadcast
+        msg.get("last_step").foreach { step =>
+          t.appendMetric(step.toLong, msg("last_value").toDouble)
+          undigested.release()
+        }
         if (msg.getOrElse("error", "false") == "true") {
           // train fn threw: ERROR, not finalized — the metric is garbage
           // (reference: failed-trial path, maggy/core/rpc.py:415-437)
@@ -170,7 +182,8 @@ final class DriverServer(
           optimizer.noteFinalized(t)
         }
       }
-      Map("type" -> MsgType.Ok)
+      lock.notifyAll()
+      assign(msg("partition").toInt)
     }
 
     case MsgType.Log =>
@@ -215,14 +228,49 @@ final class DriverServer(
       Map("type" -> MsgType.Err, "reason" -> s"unknown message type $other")
   }
 
-  /** Metric digestion: append history; run the early-stop rule every
-    * esIntervalSteps once > esMin trials finalized
-    * (reference optimization_driver.py:456-471). */
+  /** The slot's next assignment: TRIAL, or GSTOP once the optimizer is Done.
+    * While the optimizer is Idle the request parks on the monitor (`wait`
+    * releases it) and re-asks on every `notifyAll`; IDLE only after
+    * [[DriverServer.ParkMs]]. A re-registration of `partition` while parked
+    * means the asking attempt is dead: it gets GSTOP, because a trial handed
+    * to it would stay Running with no one to run it. Caller holds `lock`. */
+  private def assign(partition: Int): Map[String, String] = {
+    val epoch = epochs.get(partition)
+    val deadline = System.nanoTime() + DriverServer.ParkMs * 1000000L
+    var reply: Map[String, String] = null
+    while (reply == null) {
+      if (experimentDone || !running || epochs.get(partition) != epoch)
+        reply = Map("type" -> MsgType.GStop)
+      else optimizer.getSuggestion(None) match {
+        case NewTrial(t) =>
+          t.status = TrialStatus.Running
+          t.assignedPartition = Some(partition)
+          t.startMs = System.currentTimeMillis()
+          trials(t.trialId) = t
+          optimizer.noteStarted(t)
+          reply = Map("type" -> MsgType.Trial, "trial_id" -> t.trialId,
+            "budget" -> t.budget.map(_.toString).getOrElse("")) ++
+            ParamsCodec.encode(t.paramsSansBudget)
+        case Idle =>
+          val leftMs = (deadline - System.nanoTime() + 999999L) / 1000000L
+          if (leftMs <= 0) reply = Map("type" -> MsgType.Idle)
+          else lock.wait(leftMs)
+        case Done =>
+          experimentDone = true
+          lock.notifyAll()
+          reply = Map("type" -> MsgType.GStop)
+      }
+    }
+    reply
+  }
+
+  /** Metric digestion: run the early-stop rule every esIntervalSteps points
+    * once > esMin trials finalized (reference
+    * optimization_driver.py:456-471). */
   private def digestLoop(): Unit =
     while (running) {
-      val (id, step, value) = try metricQueue.take() catch { case _: InterruptedException => return }
+      try undigested.acquire() catch { case _: InterruptedException => return }
       lock.synchronized {
-        trials.get(id).foreach(_.appendMetric(step, value))
         stepsSinceCheck += 1
         if (stepsSinceCheck >= esIntervalSteps && optimizer.finalStore.size > esMin) {
           stepsSinceCheck = 0
@@ -236,6 +284,9 @@ final class DriverServer(
 }
 
 object DriverServer {
+  /** How long an Idle request stays parked before it is answered IDLE. */
+  private val ParkMs = 1000L
+
   /** The wire shape Reporter.logMetric emits. */
   private[exec] val MetricLine = """metric ([^=\n]+)=(\S+)""".r
 

@@ -78,7 +78,11 @@ object Wire {
 }
 
 /** Message + response type tags (reference: REG/QUERY/METRIC/FINAL/GET/LOG,
-  * maggy/core/rpc.py:395-511; responses TRIAL/IDLE/GSTOP/STOP/OK). */
+  * maggy/core/rpc.py:395-511). REG, LOG → OK; METRIC → OK or STOP; GET and
+  * FINAL → the slot's next assignment: TRIAL, GSTOP, or IDLE after the
+  * request was parked while the optimizer had nothing to hand out. FINAL
+  * carries `partition` and, when the train fn broadcast any, the
+  * reporter's `last_step` and `last_value`. */
 object MsgType {
   val Reg = "REG"
   val Get = "GET"

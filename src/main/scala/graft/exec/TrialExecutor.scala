@@ -105,9 +105,67 @@ private[exec] final class RpcChannel(host: String, port: Int, secret: String) {
   def close(): Unit = synchronized { if (sock != null) sock.close() }
 }
 
+/** A slot's heartbeat thread, one for the slot's life (reference
+  * rpc.py:716-737 client heartbeat thread). While a trial runs it streams
+  * the reporter's latest (step, metric) every `intervalMs`, honours STOP
+  * replies and ships buffered log lines. [[begin]] restarts the interval, so
+  * a trial's first heartbeat comes one interval after its train fn starts.
+  * A beat is sent while holding this object's monitor, so [[end]] returns
+  * only once no heartbeat of the ended trial is in flight. */
+private[exec] final class Heartbeat(ch: RpcChannel, intervalMs: Long, partitionId: Int) {
+  private var current: Reporter = _ // guarded by this
+  private var dueNs = 0L
+  private var closed = false
+  private val thread = new Thread(() => loop(), s"graft-hb-$partitionId")
+  thread.setDaemon(true)
+  thread.start()
+
+  def begin(r: Reporter): Unit = synchronized {
+    current = r
+    dueNs = System.nanoTime() + intervalMs * 1000000L
+    notifyAll()
+  }
+
+  def end(): Unit = synchronized { current = null }
+
+  def close(): Unit = synchronized { closed = true; current = null; notifyAll() }
+
+  /** Send the buffered log lines of `r` (reference reporter.py:137-170). */
+  def drainLogs(r: Reporter): Unit = {
+    var line = r.logQueue.poll()
+    while (line != null) {
+      ch.request(Map("type" -> MsgType.Log, "trial_id" -> r.id, "text" -> line))
+      line = r.logQueue.poll()
+    }
+  }
+
+  private def loop(): Unit = synchronized {
+    try {
+      while (!closed) {
+        val leftMs = (dueNs - System.nanoTime() + 999999L) / 1000000L
+        if (current == null) wait()
+        else if (leftMs > 0) wait(leftMs)
+        else {
+          current.latest.get().foreach { case (step, value) =>
+            val r = ch.request(Map(
+              "type" -> MsgType.Metric, "trial_id" -> current.id,
+              "step" -> step.toString, "value" -> value.toString))
+            if (r("type") == MsgType.Stop) current.stopFlag = true
+          }
+          drainLogs(current)
+          dueNs = System.nanoTime() + intervalMs * 1000000L
+        }
+      }
+    } catch { case _: InterruptedException => }
+  }
+}
+
 /** The long-lived per-partition executor loop (reference:
-  * maggy/core/executors/trial_executor.py:35-213): register, then pull
-  * trials until GSTOP; heartbeat thread streams the latest metric.
+  * maggy/core/executors/trial_executor.py:35-213): register, GET the first
+  * assignment, then run trials until GSTOP. Each FINAL's reply is the next
+  * assignment, so a slot turns over in one round trip; an IDLE reply means
+  * the driver held the request parked for a while and nothing freed up, so
+  * the loop asks again at once.
   */
 object TrialExecutor {
 
@@ -129,88 +187,54 @@ object TrialExecutor {
       port: Int,
       secret: String,
       hbIntervalMs: Long,
-      pollIntervalMs: Long,
       trainFn: TrainFn): Unit = {
 
     val main = new RpcChannel(host, port, secret)
     val hb = new RpcChannel(host, port, secret)
+    val heartbeat = new Heartbeat(hb, hbIntervalMs, partitionId)
+    val partition = "partition" -> partitionId.toString
     try {
-      main.request(Map("type" -> MsgType.Reg, "partition" -> partitionId.toString))
-
-      var done = false
-      while (!done) {
-        val resp = main.request(Map("type" -> MsgType.Get, "partition" -> partitionId.toString))
-        resp("type") match {
-          case MsgType.GStop => done = true
-          case MsgType.Idle => Thread.sleep(pollIntervalMs)
-          case MsgType.Trial =>
-            val trialId = resp("trial_id")
-            val params = ParamsCodec.decode(resp)
-            val budget = resp.get("budget").filter(_.nonEmpty).map(_.toDouble)
-            val reporter = new Reporter(trialId)
-
-            // heartbeat: stream latest (step, metric); honor STOP responses
-            // (reference rpc.py:716-737 client heartbeat thread)
-            @volatile var trialRunning = true
-            def drainLogs(): Unit = {
-              var line = reporter.logQueue.poll()
-              while (line != null) {
-                hb.request(Map("type" -> MsgType.Log, "trial_id" -> trialId, "text" -> line))
-                line = reporter.logQueue.poll()
-              }
+      main.request(Map("type" -> MsgType.Reg, partition))
+      var resp = main.request(Map("type" -> MsgType.Get, partition))
+      while (resp("type") != MsgType.GStop) resp = resp("type") match {
+        case MsgType.Idle => main.request(Map("type" -> MsgType.Get, partition))
+        case MsgType.Trial =>
+          val trialId = resp("trial_id")
+          val params = ParamsCodec.decode(resp)
+          val budget = resp.get("budget").filter(_.nonEmpty).map(_.toDouble)
+          val reporter = new Reporter(trialId)
+          val ctx = TrialContext(trialId, params, budget, partitionId, reporter)
+          var earlyStopped = false
+          var errored = false
+          heartbeat.begin(reporter)
+          val metric =
+            try trainFn(ctx)
+            catch {
+              case es: EarlyStopException => earlyStopped = true; es.lastMetric
+              case _: Throwable =>
+                // a throwing train fn fails ONE trial, not the executor:
+                // report ERROR and keep pulling (the driver drops the trial
+                // from the busy store; reference maggy/core/rpc.py:415-437)
+                errored = true; Double.NaN
             }
-            val hbThread = new Thread(() => {
-              try {
-                while (trialRunning) {
-                  reporter.latest.get() match {
-                    case Some((step, value)) =>
-                      val r = hb.request(Map(
-                        "type" -> MsgType.Metric, "trial_id" -> trialId,
-                        "step" -> step.toString, "value" -> value.toString))
-                      if (r("type") == MsgType.Stop) reporter.stopFlag = true
-                    case None =>
-                  }
-                  drainLogs()
-                  Thread.sleep(hbIntervalMs)
-                }
-              } catch { case _: InterruptedException => } // trial done
-            }, s"graft-hb-$partitionId")
-            hbThread.setDaemon(true)
-            hbThread.start()
-
-            val ctx = TrialContext(trialId, params, budget, partitionId, reporter)
-            var earlyStopped = false
-            var errored = false
-            val metric =
-              try trainFn(ctx)
-              catch {
-                case es: EarlyStopException => earlyStopped = true; es.lastMetric
-                case _: Throwable =>
-                  // a throwing train fn fails ONE trial, not the executor:
-                  // report ERROR and keep pulling (the driver drops the trial
-                  // from the busy store; reference maggy/core/rpc.py:415-437)
-                  errored = true; Double.NaN
-              }
-            trialRunning = false
-            hbThread.interrupt() // don't pay a heartbeat-interval latency per trial
-            hbThread.join(2000)
-            // flush any final heartbeat value + buffered logs before FINAL so
-            // history and per-trial log files are complete
-            reporter.latest.get().foreach { case (step, value) =>
-              hb.request(Map("type" -> MsgType.Metric, "trial_id" -> trialId,
-                "step" -> step.toString, "value" -> value.toString))
-            }
-            drainLogs()
-            main.request(Map(
-              "type" -> MsgType.Final, "trial_id" -> trialId,
-              "value" -> metric.toString,
-              "early_stopped" -> earlyStopped.toString,
-              "error" -> errored.toString))
-          case MsgType.Err =>
-            throw new IllegalStateException(s"driver rejected message: $resp")
-        }
+          heartbeat.end()
+          // buffered logs land in the per-trial log file before FINAL; the
+          // last point rides on FINAL itself, so the finalized history ends
+          // at the last broadcast step
+          heartbeat.drainLogs(reporter)
+          val last = reporter.latest.get().map { case (step, value) =>
+            Map("last_step" -> step.toString, "last_value" -> value.toString)
+          }.getOrElse(Map.empty)
+          main.request(Map(
+            "type" -> MsgType.Final, partition, "trial_id" -> trialId,
+            "value" -> metric.toString,
+            "early_stopped" -> earlyStopped.toString,
+            "error" -> errored.toString) ++ last)
+        case MsgType.Err =>
+          throw new IllegalStateException(s"driver rejected message: $resp")
       }
     } finally {
+      heartbeat.close()
       main.close()
       hb.close()
     }

@@ -70,47 +70,55 @@ object MllibLagom {
       direction: Direction.Value,
       parallelism: Int)(fit: MllibTrainFn): ExperimentResult = {
     val t0 = System.currentTimeMillis()
+    // guards the optimizer, `errored` and `done`; an Idle worker waits on it
+    // until a finalize, an error or Done changes what it could be handed
     val lock = new Object
     var errored = 0
-    @volatile var done = false
+    var done = false
+
+    /** The slot's next trial, or None once the optimizer is Done. */
+    def next(slot: Int): Option[Trial] = lock.synchronized {
+      var pick: Option[Trial] = None
+      while (pick.isEmpty && !done) optimizer.getSuggestion(None) match {
+        case NewTrial(t) =>
+          t.status = TrialStatus.Running
+          t.assignedPartition = Some(slot)
+          t.startMs = System.currentTimeMillis()
+          optimizer.noteStarted(t)
+          pick = Some(t)
+        case Idle => lock.wait()
+        case Done => done = true; lock.notifyAll()
+      }
+      pick
+    }
 
     val workers = (0 until math.max(1, parallelism)).map { slot =>
       new Thread(
         () => {
-          var stop = false
-          while (!stop) {
-            val next = lock.synchronized {
-              if (done) { stop = true; None }
-              else optimizer.getSuggestion(None) match {
-                case NewTrial(t) =>
-                  t.status = TrialStatus.Running
-                  t.assignedPartition = Some(slot)
-                  t.startMs = System.currentTimeMillis()
-                  optimizer.noteStarted(t)
-                  Some(t)
-                case Idle => None
-                case Done => done = true; stop = true; None
+          var t = next(slot)
+          while (t.isDefined) {
+            val trial = t.get
+            // reporter sinks straight into the trial's metric history
+            // (no RPC hop — the experiment is driver-local)
+            val ctx = TrialContext(
+              trial.trialId, trial.paramsSansBudget, trial.budget, slot,
+              new Reporter(trial.trialId, sink = trial.appendMetric))
+            try {
+              val metric = fit(spark, ctx)
+              lock.synchronized {
+                trial.finalize_(metric)
+                optimizer.noteFinalized(trial)
+                lock.notifyAll()
+              }
+            } catch {
+              case _: Throwable => lock.synchronized {
+                trial.status = TrialStatus.Error
+                errored += 1
+                optimizer.noteErrored(trial)
+                lock.notifyAll()
               }
             }
-            next match {
-              case Some(t) =>
-                // reporter sinks straight into the trial's metric history
-                // (no RPC hop — the experiment is driver-local)
-                val ctx = TrialContext(
-                  t.trialId, t.paramsSansBudget, t.budget, slot,
-                  new Reporter(t.trialId, sink = t.appendMetric))
-                try {
-                  val metric = fit(spark, ctx)
-                  lock.synchronized { t.finalize_(metric); optimizer.noteFinalized(t) }
-                } catch {
-                  case _: Throwable => lock.synchronized {
-                    t.status = TrialStatus.Error
-                    errored += 1
-                    optimizer.noteErrored(t)
-                  }
-                }
-              case None => if (!stop) Thread.sleep(20)
-            }
+            t = next(slot)
           }
         },
         s"graft-mllib-worker-$slot")

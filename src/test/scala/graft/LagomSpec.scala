@@ -206,34 +206,45 @@ class LagomSpec extends AnyFunSuite {
     assert(res.bestMetric == 3.0)
   }
 
+  /** One executor attempt's raw RPC connection to `server`. */
+  private final class RawSlot(server: graft.exec.DriverServer, partition: Int) {
+    private val sock = new java.net.Socket(server.host, server.port)
+    private val in = new java.io.DataInputStream(sock.getInputStream)
+    private val out = new java.io.DataOutputStream(sock.getOutputStream)
+    def req(fields: (String, String)*): Map[String, String] = {
+      graft.exec.Wire.send(out, fields.toMap +
+        ("secret" -> server.authSecret, "partition" -> partition.toString))
+      graft.exec.Wire.recv(in)
+    }
+    /** Send `fields` on a helper thread; the reply completes the future. */
+    def reqAsync(fields: (String, String)*): java.util.concurrent.CompletableFuture[Map[String, String]] =
+      java.util.concurrent.CompletableFuture.supplyAsync(() => req(fields: _*))
+    def close(): Unit = sock.close()
+  }
+
+  private def reply(f: java.util.concurrent.CompletableFuture[Map[String, String]]) =
+    f.get(10, java.util.concurrent.TimeUnit.SECONDS)
+
   test("executor re-registration marks its lost Running trial ERROR and frees the slot") {
-    import graft.exec.{DriverServer, MsgType, Wire}
+    import graft.exec.{DriverServer, MsgType}
     import graft.optimize.RandomSearch
-    import java.io.{DataInputStream, DataOutputStream}
-    import java.net.Socket
 
     val opt = new RandomSearch()
     opt.initialize(space, numTrials = 3, Direction.Max, seed = 7L)
     val server = new DriverServer(opt, Direction.Max, graft.optimize.NoStoppingRule)
     server.start()
     try {
-      val sock = new Socket(server.host, server.port)
-      val in = new DataInputStream(sock.getInputStream)
-      val out = new DataOutputStream(sock.getOutputStream)
-      def req(fields: Map[String, String]): Map[String, String] = {
-        Wire.send(out, fields + ("secret" -> server.authSecret))
-        Wire.recv(in)
-      }
-      req(Map("type" -> MsgType.Reg, "partition" -> "0"))
-      val t1 = req(Map("type" -> MsgType.Get, "partition" -> "0"))
+      val slot = new RawSlot(server, 0)
+      slot.req("type" -> MsgType.Reg)
+      val t1 = slot.req("type" -> MsgType.Get)
       assert(t1("type") == MsgType.Trial)
       // executor "dies" without FINAL; Spark's task retry re-registers
-      req(Map("type" -> MsgType.Reg, "partition" -> "0"))
+      slot.req("type" -> MsgType.Reg)
       assert(server.erroredCount == 1)
       val lost = server.allTrials.find(_.trialId == t1("trial_id")).get
       assert(lost.status == TrialStatus.Error)
       // the slot is free again: a new, different trial is assigned
-      val t2 = req(Map("type" -> MsgType.Get, "partition" -> "0"))
+      val t2 = slot.req("type" -> MsgType.Get)
       assert(t2("type") == MsgType.Trial)
       assert(t2("trial_id") != t1("trial_id"))
       // releaseSlot is the same signal emitted manually — the local thread
@@ -242,8 +253,114 @@ class LagomSpec extends AnyFunSuite {
       assert(server.erroredCount == 2)
       assert(server.allTrials.find(_.trialId == t2("trial_id"))
         .exists(_.status == TrialStatus.Error))
-      sock.close()
+      slot.close()
     } finally server.stop()
+  }
+
+  test("FINAL replies with the next trial; an Idle GET parks until FINAL ends the experiment") {
+    import graft.exec.{DriverServer, MsgType}
+    val opt = new graft.optimize.RandomSearch()
+    opt.initialize(space, numTrials = 2, Direction.Max, seed = 7L)
+    val server = new DriverServer(opt, Direction.Max, graft.optimize.NoStoppingRule)
+    server.start()
+    try {
+      val s0 = new RawSlot(server, 0)
+      val s1 = new RawSlot(server, 1)
+      s0.req("type" -> MsgType.Reg)
+      val t1 = s0.req("type" -> MsgType.Get)
+      assert(t1("type") == MsgType.Trial)
+      // FINAL carries the reporter's last point and is answered with the
+      // slot's next assignment: no separate GET
+      val t2 = s0.req("type" -> MsgType.Final, "trial_id" -> t1("trial_id"),
+        "value" -> "1.5", "last_step" -> "3", "last_value" -> "1.5")
+      assert(t2("type") == MsgType.Trial && t2("trial_id") != t1("trial_id"), t2)
+      assert(server.allTrials.find(_.trialId == t1("trial_id")).get.metricHistory ==
+        Vector(MetricPoint(3, 1.5)))
+      // both trials handed out, one running: slot 1's GET finds the optimizer
+      // Idle and parks instead of answering IDLE
+      s1.req("type" -> MsgType.Reg)
+      val parked = s1.reqAsync("type" -> MsgType.Get)
+      Thread.sleep(300)
+      assert(!parked.isDone, s"an Idle GET was answered at once: ${parked.getNow(null)}")
+      // the last FINAL ends the experiment: its own reply and the parked
+      // GET are both GSTOP
+      val end = s0.req("type" -> MsgType.Final, "trial_id" -> t2("trial_id"), "value" -> "2.0")
+      assert(end("type") == MsgType.GStop, end)
+      assert(reply(parked)("type") == MsgType.GStop)
+      assert(opt.finalStore.size == 2 && server.experimentDone)
+      s0.close(); s1.close()
+    } finally server.stop()
+  }
+
+  test("a GET parked by a dead attempt is never handed a trial after its partition re-registers") {
+    import graft.exec.{DriverServer, MsgType}
+    // one trial at a time: Idle while a trial runs, so a slot's GET parks
+    // and a freed slot is what wakes it
+    val plan = Seq(Trial.fromAny(Map("x" -> 1.0)), Trial.fromAny(Map("x" -> 2.0)))
+    val opt = new graft.optimize.Optimizer {
+      private val queue = scala.collection.mutable.Queue(plan: _*)
+      def getSuggestion(completed: Option[Trial]): graft.optimize.Suggestion =
+        if (trialStore.nonEmpty) graft.optimize.Idle
+        else if (queue.nonEmpty) graft.optimize.NewTrial(queue.dequeue())
+        else graft.optimize.Done
+    }
+    opt.initialize(Searchspace(Seq.empty), plan.size, Direction.Max, 42L)
+    val server = new DriverServer(opt, Direction.Max, graft.optimize.NoStoppingRule)
+    server.start()
+    try {
+      // partitions 0 and 1 share one executor: 0 runs t1, 1 waits for work
+      val p0 = new RawSlot(server, 0)
+      val p1 = new RawSlot(server, 1)
+      p0.req("type" -> MsgType.Reg)
+      val t1 = p0.req("type" -> MsgType.Get)
+      assert(t1("type") == MsgType.Trial)
+      p1.req("type" -> MsgType.Reg)
+      val stale = p1.reqAsync("type" -> MsgType.Get)
+      Thread.sleep(300)
+      assert(!stale.isDone)
+      // the executor dies; Spark retries partition 1 first, then partition 0,
+      // whose REG errors the lost t1 and frees the optimizer for t2
+      val p1b = new RawSlot(server, 1)
+      p1b.req("type" -> MsgType.Reg)
+      assert(reply(stale)("type") == MsgType.GStop,
+        "a parked GET of a re-registered partition must be told to stop")
+      val p1bGet = p1b.reqAsync("type" -> MsgType.Get)
+      val p0b = new RawSlot(server, 0)
+      p0b.req("type" -> MsgType.Reg)
+      assert(server.erroredCount == 1)
+      // t2 goes to the live attempt of partition 1, not the dead one
+      val t2 = reply(p1bGet)
+      assert(t2("type") == MsgType.Trial && t2("trial_id") == plan(1).trialId, t2)
+      val p0bGet = p0b.reqAsync("type" -> MsgType.Get)
+      val end = p1b.req("type" -> MsgType.Final, "trial_id" -> t2("trial_id"), "value" -> "2.0")
+      assert(end("type") == MsgType.GStop, end)
+      assert(reply(p0bGet)("type") == MsgType.GStop)
+      assert(opt.finalStore.map(_.trialId) == Seq(plan(1).trialId))
+      assert(server.allTrials.forall(_.status != TrialStatus.Running))
+      Seq(p0, p1, p1b, p0b).foreach(_.close())
+    } finally server.stop()
+  }
+
+  test("a finalized trial's metric history ends at its last broadcast step") {
+    // the heartbeat never fires within these instant trains (60 s
+    // interval): every trial's one broadcast point reaches its history on
+    // FINAL, before the trial is finalized and summarized
+    object OneStep extends TrainFn {
+      def apply(ctx: TrialContext): Double = {
+        val v = ctx.double("x") + ctx.double("y")
+        ctx.reporter.broadcast(v, 7)
+        v
+      }
+    }
+    val res = Graft.lagomLocal(HyperparameterOptConfig(
+      numTrials = 40, optimizer = "randomsearch", searchspace = space,
+      direction = Direction.Max, esPolicy = "none", hbIntervalMs = 60000,
+      logSink = Some((_: String, _: String) => ())), parallelism = 4)(OneStep)
+    assert(res.numTrials == 40)
+    res.trials.foreach { t =>
+      assert(t.metric_history == Seq((7L, t.metric.get)),
+        s"trial ${t.trial_id}: ${t.metric_history}")
+    }
   }
 
   test("async scheduling beats synchronized batches on variable-duration trials") {
